@@ -140,8 +140,8 @@ def main() -> None:
     stage_names = [
         "turns_normalized",
         "mentions",
+        "blocks_raw",
         "blocks",
-        "candidate_pairs",
         "scored_pairs",
         "jw_scores",
         "entity_clusters",

@@ -76,60 +76,71 @@ class Pipeline:
         return self.catalog.read(name)
 
 
+# Blocking and broadcast caps. They are constants: each run sizes its
+# broadcast choices from the measured lineage row counts below, so the caps
+# only bound those choices. ``run_er_pipeline`` records the blocking ones in
+# its params, so the lineage sidecar shows what ran.
+MAX_BLOCK_SIZE = 400
+SALT_BUCKETS = 16
+MINHASH_NUM_HASHES = 16
+MINHASH_BAND_SIZE = 2
+BROADCAST_ROW_LIMIT = 2_000_000
+# An explicit F.broadcast hint bypasses autoBroadcastJoinThreshold AND
+# Spark's sanity checks until the 8 GB hard limit, so broadcasts are gated
+# on estimated bytes, not a row multiplier: a block row is two short strings
+# (turn_key ~14 B + block_key ~30 B) that a JVM hash relation roughly
+# doubles — call it 96 B/row built. 512 MB ≈ 5.6M rows.
+BROADCAST_BLOCK_BYTES = 512 << 20
+HASH_ROW_BYTES = 96
+
+
 def run_er_pipeline(
     spark: SparkSession,
     workdir: str,
     transcripts: DataFrame,
     model=None,
-    max_block_size: int = 400,
-    salt_buckets: int = 16,
     max_token_df: Optional[int] = None,
     jw_threshold: float = 0.92,
     jaccard_threshold: float = 0.6,
-    broadcast_row_limit: int = 2_000_000,
-    broadcast_block_bytes: int = 512 << 20,
-    use_minhash_blocks: bool = True,
-    minhash_num_hashes: int = 16,
-    minhash_band_size: int = 2,
     snm_window: int = 0,
-    fuse_pairs: bool = True,
-    compact_scored: bool = True,
 ) -> Dict[str, object]:
     """Full ER run over a transcripts DataFrame (input_hint schema).
 
+    Stage graph: turns_normalized -> mentions -> blocks_raw -> blocks ->
+    scored_pairs -> jw_scores -> entity_clusters, each checkpointed and
+    resumable.
+
     Blocking is the union of the two north_star keys: shared normalized
     token x (tool, role) — the recall workhorse and the F1-gate key — and
-    MinHash band x (tool, role) over the normalized token set
-    (``use_minhash_blocks``), which catches near-duplicate turns whose
-    shared tokens were DF-capped away (``max_token_df``) and adds a second,
-    structurally different candidate source. Both go through the same
-    salting; the oversized-key report covers both key families.
-    ``snm_window`` > 1 unions a third, sort-order-based family
-    (``snm_blocks``: sorted-neighborhood window keys, bounded at
-    window_size members per key by construction — never salted).
+    MinHash band x (tool, role) over the normalized token set, which
+    catches near-duplicate turns whose shared tokens were DF-capped away
+    (``max_token_df``) and adds a second, structurally different candidate
+    source. Both go through the same salting; the oversized-key report
+    covers both key families. ``snm_window`` > 1 unions a third,
+    sort-order-based family (``snm_blocks``: sorted-neighborhood window
+    keys, bounded at window_size members per key by construction — never
+    salted).
 
     Returns {'clusters': DataFrame, 'metrics': dict, 'pipeline': Pipeline}.
     """
     model = model or default_model()
     params = {
-        "max_block_size": max_block_size,
-        "salt_buckets": salt_buckets,
+        "max_block_size": MAX_BLOCK_SIZE,
+        "salt_buckets": SALT_BUCKETS,
         "max_token_df": max_token_df,
         "jw_threshold": jw_threshold,
         "jaccard_threshold": jaccard_threshold,
-        "use_minhash_blocks": use_minhash_blocks,
-        "minhash_num_hashes": minhash_num_hashes,
-        "minhash_band_size": minhash_band_size,
+        "use_minhash_blocks": True,
+        "minhash_num_hashes": MINHASH_NUM_HASHES,
+        "minhash_band_size": MINHASH_BAND_SIZE,
         "snm_window": snm_window,
         # split scored plan (base set-features stage + undecided-only JW
         # stage); also versions the checkpoint schema so pre-split workdirs
         # recompute instead of resuming into the wrong layout
         "scoring_plan": "split-v2",
-        "fuse_pairs": fuse_pairs,
-        # compact: the scored checkpoint keeps only the rows downstream
-        # consumes (shared-entity + undecided); full pair mass is counted
-        # in-flight via Observation — versions the checkpoint layout
-        "scored_layout": "compact-v1" if compact_scored else "full",
+        # versions the compact scored checkpoint (live rows only, full pair
+        # mass in lineage counters) the same way
+        "scored_layout": "compact-v1",
         "model": model.config_json(),
     }
     pipe = Pipeline(spark, workdir, params)
@@ -145,11 +156,9 @@ def run_er_pipeline(
     mention_entities = with_turn_key(turn_entities_df(mentions))
 
     def build_raw_blocks() -> DataFrame:
-        blocks = token_blocks(turns, max_df=max_token_df)
-        if use_minhash_blocks:
-            blocks = blocks.unionByName(
-                minhash_blocks(turns, num_hashes=minhash_num_hashes, band_size=minhash_band_size)
-            )
+        blocks = token_blocks(turns, max_df=max_token_df).unionByName(
+            minhash_blocks(turns, num_hashes=MINHASH_NUM_HASHES, band_size=MINHASH_BAND_SIZE)
+        )
         if snm_window > 1:
             blocks = blocks.unionByName(snm_blocks(turns, window_size=snm_window))
         return blocks
@@ -168,7 +177,7 @@ def run_er_pipeline(
     raw_blocks = pipe.stage("blocks_raw", build_raw_blocks, params={"blocks_layout": "raw-v1"})
 
     def build_salted() -> DataFrame:
-        salted, oversized = salt_oversized_blocks(raw_blocks, max_block_size, salt_buckets)
+        salted, oversized = salt_oversized_blocks(raw_blocks, MAX_BLOCK_SIZE, SALT_BUCKETS)
         # one cheap aggregation over the raw checkpoint for the
         # no-silent-truncation report, split by key family so band-key skew
         # is visible separately from token skew. Band keys are
@@ -199,43 +208,27 @@ def run_er_pipeline(
     # whenever the small side fits in executor memory.
     n_turns = int((pipe.metrics.get("turns_normalized") or {}).get("rows") or 0)
     n_blocks = int((pipe.metrics.get("blocks") or {}).get("rows") or 0)
-    bcast_feats = 0 < n_turns <= broadcast_row_limit
-    # An explicit F.broadcast hint bypasses autoBroadcastJoinThreshold AND
-    # Spark's sanity checks until the 8 GB hard limit, so gate on estimated
-    # bytes, not a row multiplier: a block row is two short strings
-    # (turn_key ~14 B + block_key ~30 B) that a JVM hash relation roughly
-    # doubles — call it 96 B/row built. Default cap 512 MB ≈ 5.6M rows.
-    bcast_blocks = 0 < n_blocks * 96 <= broadcast_block_bytes
-
-    def build_pairs() -> DataFrame:
-        # Row-budget spread of the streaming side (inside candidate_pairs):
-        # the block table dictionary-compresses to a few bytes/row, so even
-        # the lowered scan budget (session.py SPARK_GRAFT_MAX_PARTITION_BYTES,
-        # 8MB) yields fewer partitions than cores after the checkpoint read.
-        # The shuffle moves only MBs; the |pairs|-sized output never
-        # repartitions (a repartition at pair scale measurably dominates).
-        return candidate_pairs(
-            blocks,
-            broadcast_blocks=bcast_blocks,
-            dedupe=False,
-            spread_to=max(spark.sparkContext.defaultParallelism, n_blocks // 100_000),
-        )
+    bcast_feats = 0 < n_turns <= BROADCAST_ROW_LIMIT
+    bcast_blocks = 0 < n_blocks * HASH_ROW_BYTES <= BROADCAST_BLOCK_BYTES
 
     # The pair table is the largest intermediate (O(block_size x turns) rows
-    # of two short keys) and the scored stage is its only consumer.
-    # fuse_pairs (the default) skips its checkpoint and feeds the
-    # unmaterialized self-join plan straight into score_pairs_base: one full
-    # write+read of |pairs| rows disappears from the wall (measured 1.09x
-    # median at 8c/203M pairs, the 36-41 s candidate_pairs stage eliminated
-    # while the scored stage stays in its noise band — tools/ab_fuse_pairs.py)
-    # at the cost of resume granularity: a restart recomputes pairs inside
-    # the scored stage, and the extra work is just the block self-join.
-    # pairs_scored reporting is unaffected: it reads scored_pairs lineage.
-    if fuse_pairs:
-        pairs = build_pairs()
-        pipe.metrics["candidate_pairs"] = {"fused": True}
-    else:
-        pairs = pipe.stage("candidate_pairs", build_pairs)
+    # of two short keys) and the scored stage is its only consumer, so it
+    # has no checkpoint of its own: the unmaterialized self-join plan feeds
+    # score_pairs_base directly, which keeps one full write+read of |pairs|
+    # rows off the wall (measured 1.09x median at 8c/203M pairs). A resumed
+    # run that must recompute scored_pairs redoes only the block self-join.
+    # Row-budget spread of the streaming side: the block table
+    # dictionary-compresses to a few bytes/row, so even the lowered scan
+    # budget (session.py SPARK_GRAFT_MAX_PARTITION_BYTES, 8MB) yields fewer
+    # partitions than cores after the checkpoint read. The shuffle moves only
+    # MBs; the |pairs|-sized output never repartitions (a repartition at pair
+    # scale measurably dominates).
+    pairs = candidate_pairs(
+        blocks,
+        broadcast_blocks=bcast_blocks,
+        dedupe=False,
+        spread_to=max(spark.sparkContext.defaultParallelism, n_blocks // 100_000),
+    )
     features = turn_features(turns, mention_entities)
     # Split scored plan (VERDICT r2 item 2): stage 1 is pure codegen (no
     # ArrowEvalPython over |pairs|); stage 2 re-reads the checkpoint with
@@ -243,34 +236,31 @@ def run_er_pipeline(
     # only. score_pairs (single-pass, masked inputs) remains the right
     # shape for non-checkpointing callers — here the materialization is
     # free because the stage checkpoints anyway.
-    # compact_scored (the default): of the O(pairs) scored rows, downstream
-    # only ever reads the shared-entity rows (decided match edges) and the
-    # undecided rows (the JW slice) — typically <2% of the mass. Writing
-    # the decided-nonmatch majority to the dominant checkpoint is pure dead
-    # I/O at any scale, so the stage filters to the live rows BEFORE the
-    # write and counts the full pair mass in the same job via Observation
-    # (no second pass; the counts land in lineage so resume recovers them).
-    # Consumers needing the complete candidate-pair key set (the F1 audit)
-    # use result["pairs_all"] — the unmaterialized pair plan — instead of
-    # the scored checkpoint.
-    obs = Observation("scored_pairs_full") if compact_scored else None
+    # The scored checkpoint is compact: of the O(pairs) scored rows,
+    # downstream only ever reads the shared-entity rows (decided match
+    # edges) and the undecided rows (the JW slice) — typically <2% of the
+    # mass. Writing the decided-nonmatch majority would be dead I/O at any
+    # scale, so the stage filters to the live rows BEFORE the write and
+    # counts the full pair mass in the same job via Observation (no second
+    # pass; the counts land in lineage so resume recovers them). Consumers
+    # needing the complete candidate-pair key set (the F1 audit) use
+    # result["pairs_all"] — the unmaterialized pair plan — instead.
+    obs = Observation("scored_pairs_full")
 
     def build_scored() -> DataFrame:
         base = score_pairs_base(
             pairs, features, jaccard_threshold, broadcast_features=bcast_feats
         )
-        if compact_scored:
-            counted = base.observe(
-                obs,
-                F.count(F.lit(1)).alias("pairs_full"),
-                F.sum(F.col("undecided").cast("long")).alias("undecided_rows"),
-                F.sum(F.col("shared_entity").cast("long")).alias("shared_rows"),
-            )
-            return counted.filter(F.col("shared_entity") | F.col("undecided"))
-        return base
+        counted = base.observe(
+            obs,
+            F.count(F.lit(1)).alias("pairs_full"),
+            F.sum(F.col("undecided").cast("long")).alias("undecided_rows"),
+            F.sum(F.col("shared_entity").cast("long")).alias("shared_rows"),
+        )
+        return counted.filter(F.col("shared_entity") | F.col("undecided"))
 
     scored_base = pipe.stage("scored_pairs", build_scored)
-    if compact_scored and not pipe.metrics["scored_pairs"].get("resumed"):
+    if not pipe.metrics["scored_pairs"].get("resumed"):
         got = obs.get
         extra = {k: int(got[k] or 0) for k in ("pairs_full", "undecided_rows", "shared_rows")}
         pipe.metrics["scored_pairs"].update(extra)
@@ -280,14 +270,13 @@ def run_er_pipeline(
         lambda: jw_scores_for_undecided(scored_base, features, broadcast_features=bcast_feats),
     )
     # the slice is usually tiny; broadcast the join-back only when it fits
-    # (same 96 B/row hash-relation estimate as the block broadcast above)
     n_jw = int((pipe.metrics.get("jw_scores") or {}).get("rows") or 0)
     scored = finalize_scored(
         scored_base,
         jw_slice,
         jw_threshold,
         jaccard_threshold,
-        broadcast_jw=0 <= n_jw * 96 <= broadcast_block_bytes,
+        broadcast_jw=0 <= n_jw * HASH_ROW_BYTES <= BROADCAST_BLOCK_BYTES,
     )
     cc_stats: Dict[str, object] = {}
     # Edge source for clustering, chosen from lineage counts (both produce
@@ -301,7 +290,7 @@ def run_er_pipeline(
     #   corpus: 3.66M shared pairs from 0.43M block rows; at web scale a
     #   hot entity makes shared_rows explode while block rows stay linear).
     n_shared = int((pipe.metrics.get("scored_pairs") or {}).get("shared_rows") or 0)
-    use_star = compact_scored and n_shared > n_blocks
+    use_star = n_shared > n_blocks
 
     def build_edges() -> DataFrame:
         if use_star:
@@ -318,13 +307,13 @@ def run_er_pipeline(
     pipe.metrics["cluster_edge_source"] = {"star": use_star, "shared_rows": n_shared, "block_rows": n_blocks}
     if cc_stats:  # empty when the stage was resumed from checkpoint
         pipe.metrics["clustering_convergence"] = dict(cc_stats)
-    # pairs_all: the complete candidate-pair key set, for consumers that
-    # need every pair rather than the live scored rows (the F1 audit's
-    # labeled-pair denominator). Fused -> the lazy self-join plan (recomputed
-    # by the consumer, outside the timed window); checkpointed -> the table.
     return {
         "clusters": clusters,
         "scored": scored,
+        # pairs_all: the complete candidate-pair key set, for consumers that
+        # need every pair rather than the live scored rows (the F1 audit's
+        # labeled-pair denominator) — the lazy self-join plan, recomputed by
+        # the consumer outside the timed window
         "pairs_all": pairs.select("key_a", "key_b"),
         # the salted blocks checkpoint (stage 'blocks' — its own materialized
         # stage after the two-stage split, distinct from the raw construction
@@ -345,9 +334,9 @@ def evaluate_f1(scored: DataFrame, clusters: DataFrame, truth: DataFrame) -> Dic
 
     ``scored`` is any DataFrame carrying the complete candidate-pair key
     set as (key_a, key_b) — pass ``result["pairs_all"]``, NOT the scored
-    checkpoint: under the compact layout the checkpoint keeps only the
-    live (shared/undecided) rows, which would silently drop the
-    decided-nonmatch labeled pairs from the fn count.
+    checkpoint: it keeps only the live (shared/undecided) rows, which
+    would silently drop the decided-nonmatch labeled pairs from the fn
+    count.
 
     When the corpus carries ``plant_style`` (hard-slice corpora, synth.py),
     a ``hard_slice`` sub-report covers the pairs with at least one
@@ -606,7 +595,6 @@ def main() -> None:
     parser.add_argument("--max-token-df", type=int, default=None, help="drop blocking tokens with document frequency above this (filler-stopword cap)")
     parser.add_argument("--hard-every", type=int, default=None, help="every Nth conversation is a hard-slice template conversation (sample dictionary only)")
     parser.add_argument("--snm-window", type=int, default=0, help="union sorted-neighborhood window-key blocks (window size; 0/1 = off)")
-    parser.add_argument("--fuse-pairs", action=argparse.BooleanOptionalAction, default=True, help="skip the candidate-pair checkpoint and feed the self-join plan straight into scoring (default; --no-fuse-pairs restores the per-stage pair checkpoint for finer resume)")
     parser.add_argument("--skip-eval", action="store_true", help="skip the (untimed) F1 + recall audit pass — for timing-only A/B runs; never use when reporting quality numbers")
     args = parser.parse_args()
 
@@ -631,13 +619,12 @@ def main() -> None:
     ).save()
 
     start = time.time()
-    result = run_er_pipeline(spark, args.workdir, transcripts, model=model, max_token_df=args.max_token_df, fuse_pairs=args.fuse_pairs, snm_window=args.snm_window)
+    result = run_er_pipeline(spark, args.workdir, transcripts, model=model, max_token_df=args.max_token_df, snm_window=args.snm_window)
     wall = time.time() - start  # the pipeline (all stages materialized)
     # row counts come from stage lineage — no extra count jobs in the
     # timed window; the F1 audit below reads the materialized checkpoints
     # and is timed separately (it is a verification pass, not a stage).
-    sp_metrics = result["metrics"]["scored_pairs"]
-    n_pairs = int(sp_metrics.get("pairs_full", sp_metrics["rows"]))
+    n_pairs = int(result["metrics"]["scored_pairs"]["pairs_full"])
     eval_start = time.time()
     scores, recall_report = {}, None
     if not args.skip_eval:
@@ -665,7 +652,7 @@ def main() -> None:
         "f1_eval_seconds": round(eval_wall, 2),
         **({"blocking_recall": recall_report} if recall_report is not None else {}),
         **scores,
-        "stages": {k: {kk: v[kk] for kk in ("rows", "wall_seconds", "stage_wall_seconds", "resumed", "count", "band_keys", "token_keys", "iterations", "converged", "unconverged_labels", "fused", "pairs_full", "undecided_rows", "shared_rows") if isinstance(v, dict) and kk in v} for k, v in result["metrics"].items()},
+        "stages": {k: {kk: v[kk] for kk in ("rows", "wall_seconds", "stage_wall_seconds", "resumed", "count", "band_keys", "token_keys", "iterations", "converged", "unconverged_labels", "pairs_full", "undecided_rows", "shared_rows") if isinstance(v, dict) and kk in v} for k, v in result["metrics"].items()},
     }
     print(json.dumps(report))
     spark.stop()

@@ -53,9 +53,18 @@ class Catalog:
         return lineage.get("params_hash") == params_hash(expected_params)
 
     def write(self, df: DataFrame, table: str, params: Optional[dict] = None) -> dict:
-        """Materialize a stage output + lineage sidecar; returns metrics."""
+        """Materialize a stage output + lineage sidecar; returns metrics.
+
+        The old sidecar is removed before the data is overwritten and the
+        new one is written last, so a write that fails midway leaves no
+        sidecar: ``exists`` is False and the next run recomputes instead of
+        resuming half-written data."""
         start = time.time()
         path = self._path(table)
+        try:
+            os.remove(self._lineage_path(table))
+        except FileNotFoundError:
+            pass
         if self.use_iceberg:
             df.writeTo(table).createOrReplace()
             out = self.read(table)
@@ -97,8 +106,7 @@ class Catalog:
             "wall_seconds": round(time.time() - start, 3),
             "schema": out.schema.simpleString(),
         }
-        with open(self._lineage_path(table), "w") as f:
-            json.dump(lineage, f, indent=1)
+        self._write_lineage(table, lineage)
         return lineage
 
     def read(self, table: str) -> DataFrame:
@@ -114,8 +122,16 @@ class Catalog:
         if lineage is None:
             return
         lineage.update(extra)
-        with open(self._lineage_path(table), "w") as f:
+        self._write_lineage(table, lineage)
+
+    def _write_lineage(self, table: str, lineage: dict) -> None:
+        """Temp file + os.replace: a crash mid-write never leaves a
+        truncated sidecar under the real name."""
+        path = self._lineage_path(table)
+        tmp = f"{path}.tmp"
+        with open(tmp, "w") as f:
             json.dump(lineage, f, indent=1)
+        os.replace(tmp, path)
 
     def lineage(self, table: str) -> Optional[dict]:
         try:

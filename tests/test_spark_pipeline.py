@@ -402,76 +402,42 @@ def test_split_plan_matches_single_pass_scorer(spark, model, transcripts, tmp_pa
 
 
 def test_pipeline_resume(spark, transcripts, tmp_path):
-    """Second run with identical params resumes every stage from checkpoint;
-    a changed param invalidates downstream stages."""
-    work = str(tmp_path / "resume")
-    # fuse_pairs=False: this test exercises the per-stage checkpoint/resume
-    # path, which includes the candidate_pairs checkpoint the fused default
-    # deliberately skips.
-    r1 = run_er_pipeline(spark, work, transcripts, fuse_pairs=False)
+    """Second run with identical params resumes every stage from checkpoint,
+    scored counters included; a changed param invalidates downstream
+    stages."""
+    work = tmp_path / "resume"
+    r1 = run_er_pipeline(spark, str(work), transcripts)
     assert all(not m.get("resumed", False) for m in r1["metrics"].values() if isinstance(m, dict) and "resumed" in m)
-    r2 = run_er_pipeline(spark, work, transcripts, fuse_pairs=False)
-    resumed = [k for k, m in r2["metrics"].items() if isinstance(m, dict) and m.get("resumed")]
-    assert set(resumed) >= {"turns_normalized", "mentions", "blocks", "candidate_pairs", "scored_pairs", "entity_clusters"}
-    # param change -> stages recompute
-    r3 = run_er_pipeline(spark, work, transcripts, jw_threshold=0.95, fuse_pairs=False)
-    assert not r3["metrics"]["scored_pairs"].get("resumed")
-
-
-def test_pipeline_fuse_pairs_parity(spark, transcripts, tmp_path):
-    """fuse_pairs=True skips the candidate-pair checkpoint but must produce
-    the identical scored table and cluster assignment — the fused plan feeds
-    the same self-join into score_pairs_base, only unmaterialized."""
-    r_ckpt = run_er_pipeline(spark, str(tmp_path / "ckpt"), transcripts, fuse_pairs=False)
-    r_fused = run_er_pipeline(spark, str(tmp_path / "fused"), transcripts, fuse_pairs=True)
-    assert r_fused["metrics"]["candidate_pairs"] == {"fused": True}
-    assert "candidate_pairs" not in [
-        p.name for p in (tmp_path / "fused").iterdir() if p.is_dir()
-    ]
-    cols = ["key_a", "key_b", "jaccard", "is_match"]
-    a = sorted(map(tuple, r_ckpt["scored"].select(*cols).distinct().collect()))
-    b = sorted(map(tuple, r_fused["scored"].select(*cols).distinct().collect()))
-    assert a == b and len(a) > 0
-    ca = sorted(map(tuple, r_ckpt["clusters"].collect()))
-    cb = sorted(map(tuple, r_fused["clusters"].collect()))
-    assert ca == cb
-
-
-def test_pipeline_compact_scored_parity(spark, transcripts, tmp_path):
-    """compact_scored (the default) drops decided-nonmatch rows from the
-    scored checkpoint but must leave every downstream product unchanged:
-    identical clusters, identical F1 over pairs_all, and a pairs_full
-    Observation count equal to the full layout's materialized row count."""
-    r_full = run_er_pipeline(spark, str(tmp_path / "full"), transcripts, compact_scored=False)
-    r_comp = run_er_pipeline(spark, str(tmp_path / "comp"), transcripts)
-    m = r_comp["metrics"]["scored_pairs"]
-    assert m["pairs_full"] == r_full["metrics"]["scored_pairs"]["rows"]
-    # the decided-nonmatch majority really was dropped
+    m = r1["metrics"]["scored_pairs"]
+    # the scored checkpoint keeps only the live rows (shared-entity and
+    # undecided, disjoint by construction); the Observation counts every pair
+    assert m["rows"] == m["undecided_rows"] + m["shared_rows"]
     assert 0 < m["rows"] < m["pairs_full"]
-    assert m["rows"] == m["undecided_rows"] + m["shared_rows"]  # disjoint by construction
-    # compact scored rows == full scored filtered to the live condition
-    live = F.col("shared_entity") | (~F.col("shared_entity") & (F.col("jaccard") >= 0.3))
-    a = sorted(map(tuple, r_full["scored"].filter(live).collect()))
-    b = sorted(map(tuple, r_comp["scored"].collect()))
-    assert a == b and len(b) > 0
-    assert sorted(map(tuple, r_full["clusters"].collect())) == sorted(
-        map(tuple, r_comp["clusters"].collect())
-    )
-    fa = evaluate_f1(r_full["pairs_all"], r_full["clusters"], transcripts)
-    fb = evaluate_f1(r_comp["pairs_all"], r_comp["clusters"], transcripts)
-    assert fa == fb and fb["labeled_pairs"] > 1000
+    assert m["pairs_full"] == r1["pairs_all"].count()
 
-    # resume: the Observation counts round-trip through the lineage sidecar
-    r_res = run_er_pipeline(spark, str(tmp_path / "comp"), transcripts)
-    assert r_res["metrics"]["scored_pairs"]["resumed"]
-    assert r_res["metrics"]["scored_pairs"]["pairs_full"] == m["pairs_full"]
+    r2 = run_er_pipeline(spark, str(work), transcripts)
+    resumed = [k for k, v in r2["metrics"].items() if isinstance(v, dict) and v.get("resumed")]
+    assert set(resumed) == {
+        "turns_normalized", "mentions", "blocks_raw", "blocks", "scored_pairs", "jw_scores", "entity_clusters",
+    }
+    # the pair table is never checkpointed: the scored stage consumes the self-join plan
+    assert not (work / "candidate_pairs").exists()
+    # the Observation counts round-trip through the lineage sidecar
+    m2 = r2["metrics"]["scored_pairs"]
+    assert {k: m2[k] for k in ("pairs_full", "undecided_rows", "shared_rows")} == {
+        k: m[k] for k in ("pairs_full", "undecided_rows", "shared_rows")
+    }
+    assert sorted(map(tuple, r2["clusters"].collect())) == sorted(map(tuple, r1["clusters"].collect()))
+    # param change -> stages recompute
+    r3 = run_er_pipeline(spark, str(work), transcripts, jw_threshold=0.95)
+    assert not r3["metrics"]["scored_pairs"].get("resumed")
 
 
 def test_lineage_recorded(spark, transcripts, tmp_path):
     work = str(tmp_path / "lineage")
     result = run_er_pipeline(spark, work, transcripts)
-    # scored_pairs, not candidate_pairs: the fused default never
-    # materializes the pair table, so its lineage lives in the consumer.
+    # scored_pairs, not candidate_pairs: the pipeline never materializes
+    # the pair table, so its lineage lives in the consumer.
     lineage = result["pipeline"].catalog.lineage("scored_pairs")
     assert lineage["rows"] > 0
     assert len(lineage["partitions"]) >= 1
@@ -573,6 +539,28 @@ def test_catalog_iceberg_path_routing(spark, tmp_path, monkeypatch):
     assert cat.read("stage_t").count() == 5  # routed through read.table
     assert cat.exists("stage_t", {"p": 1})  # resume contract: params hash
     assert not cat.exists("stage_t", {"p": 2})
+
+
+def test_catalog_failed_overwrite_drops_sidecar(spark, tmp_path):
+    """An overwrite that fails mid-job must not leave the previous sidecar
+    next to the half-written data: a rerun with the previous params would
+    otherwise resume that data silently."""
+    from pilsner_spark.sources.catalog import Catalog
+
+    cat = Catalog(spark, str(tmp_path))
+    cat.write(spark.range(10), "t", {"p": 1})
+    assert cat.exists("t", {"p": 1})
+    cat.amend_lineage("t", {"extra": 1})
+    assert cat.lineage("t")["extra"] == 1
+    assert not list(tmp_path.glob("*.tmp"))  # sidecars land via temp file + rename
+
+    failing = spark.range(10).withColumn(
+        "id", F.when(F.col("id") > 5, F.raise_error(F.lit("injected write fault"))).otherwise(F.col("id"))
+    )
+    with pytest.raises(Exception, match="injected write fault"):
+        cat.write(failing, "t", {"p": 2})
+    assert not cat.exists("t", {"p": 1})
+    assert not cat.exists("t", {"p": 2})
 
 
 def test_sharded_scan_cross_shard_overlap(spark):

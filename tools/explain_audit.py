@@ -128,9 +128,9 @@ CHECKS = {
             ("no row-at-a-time Python", r"BatchEvalPython"),
         ],
     },
-    # the fused variant (pipeline --fuse-pairs): scored stage consumes the
-    # UNmaterialized block self-join. Budget: exactly one Exchange, the
-    # round-robin spread of the tiny block table (MBs); the |pairs|-sized
+    # the pipeline's scored stage: it consumes the UNmaterialized block
+    # self-join. Budget: exactly one Exchange, the round-robin spread of
+    # the tiny block table (MBs); the |pairs|-sized
     # stream goes scan -> broadcast self-join -> broadcast feature joins ->
     # project without ever shuffling or entering Python.
     "er_scored_fused": {
@@ -426,9 +426,9 @@ def _split_stage_dfs(spark):
     base = score_pairs_base(spark.read.parquet(f"{tmp}/pairs"), feats_ck, broadcast_features=True)
     base.write.mode("overwrite").parquet(f"{tmp}/base")
     base_ck = spark.read.parquet(f"{tmp}/base")
-    # fused stage: blocks come off their checkpoint, get the pipeline's
+    # the pipeline's scored stage: blocks come off their checkpoint, get the
     # row-budget spread, and the self-join stays unmaterialized under the
-    # feature joins (plans/pipeline.py fuse_pairs=True)
+    # feature joins (plans/pipeline.py run_er_pipeline)
     fused_pairs = candidate_pairs(
         spark.read.parquet(f"{tmp}/blocks"),
         broadcast_blocks=True,
