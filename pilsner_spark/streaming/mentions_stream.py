@@ -134,6 +134,7 @@ def incremental_cluster_assignments(
     clusters_path = os.path.join(workdir, "stream_entity_clusters")
     meta_path = os.path.join(workdir, "stream_cluster_meta.json")
     metrics_path = os.path.join(workdir, "stream_cluster_metrics.jsonl")
+    nodes_schema = "node_key string, cluster_id string, bucket int"
 
     def bucket_of(cid_col):
         return F.pmod(F.xxhash64(cid_col), F.lit(n_buckets)).cast("int")
@@ -163,9 +164,10 @@ def incremental_cluster_assignments(
         )
         have_prev = os.path.exists(nodes_path)
         if have_prev:
-            prev = spark.read.parquet(nodes_path)
+            # the declared schema spares a footer-inference job per batch
+            prev = spark.read.schema(nodes_schema).parquet(nodes_path)
         else:
-            prev = spark.createDataFrame([], "node_key string, cluster_id string, bucket int")
+            prev = spark.createDataFrame([], nodes_schema)
         # prev_rows from the sidecar meta, NOT a count job over history; a
         # missing meta next to an existing table (layout migration) falls
         # back to one count, once, and repairs the meta
@@ -262,8 +264,11 @@ def incremental_cluster_assignments(
         bytes_written = tree_bytes_since(nodes_path, write_start) + (
             tree_bytes_since(clusters_path, write_start) if os.path.exists(clusters_path) else 0
         )
-        with open(meta_path, "w") as f:
+        # temp file + os.replace: a crash mid-write never leaves truncated
+        # JSON for the next batch's json.load
+        with open(f"{meta_path}.tmp", "w") as f:
             json.dump({"rows": prev_rows + len(fresh_rows)}, f)
+        os.replace(f"{meta_path}.tmp", meta_path)
         with open(metrics_path, "a") as f:
             f.write(
                 json.dumps(

@@ -442,7 +442,118 @@ def test_lineage_recorded(spark, transcripts, tmp_path):
     assert lineage["rows"] > 0
     assert len(lineage["partitions"]) >= 1
     assert sum(p["rows"] for p in lineage["partitions"]) == lineage["rows"]
-    assert "params_hash" in lineage and "schema" in lineage
+    assert "params_hash" in lineage and "schema" in lineage and "schema_json" in lineage
+
+
+STAGES = ("turns_normalized", "mentions", "blocks_raw", "blocks", "scored_pairs", "jw_scores", "entity_clusters")
+
+
+@pytest.fixture(scope="module")
+def small_run(spark, tmp_path_factory):
+    """A completed workdir of a tiny ER pipeline run, plus its corpus; tests
+    that damage checkpoints work on a copy (``small_workdir``)."""
+    tr = synth_transcripts(spark, n_convs=40, seed=11).localCheckpoint()
+    work = str(tmp_path_factory.mktemp("small_run") / "work")
+    result = run_er_pipeline(spark, work, tr)
+    rows = {s: result["metrics"][s]["rows"] for s in STAGES}
+    return tr, work, rows
+
+
+@pytest.fixture
+def small_workdir(small_run, tmp_path):
+    import shutil
+
+    tr, work, rows = small_run
+    copy = str(tmp_path / "work")
+    shutil.copytree(work, copy)
+    return tr, copy, rows
+
+
+def test_checkpoint_schema_parity(spark, small_run):
+    """The schema recorded in each sidecar is the one parquet inference
+    would find in the files, nullability included."""
+    from pilsner_spark.sources.catalog import Catalog
+
+    _tr, work, _rows = small_run
+    cat = Catalog(spark, work)
+    for s in STAGES:
+        assert cat.read(s).schema == spark.read.parquet(os.path.join(work, s)).schema, s
+
+
+def test_resume_launches_no_spark_job(spark, small_workdir):
+    """A full resume plans every checkpoint read from its sidecar: no
+    schema-inference job, so no Spark job at all before the caller's own
+    action."""
+    tr, work, rows = small_workdir
+    sc = spark.sparkContext
+    sc.setJobGroup("resume", "checkpoint resume must launch no Spark job")
+    try:
+        result = run_er_pipeline(spark, work, tr)
+        jobs = list(sc.statusTracker().getJobIdsForGroup("resume"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert all(result["metrics"][s]["resumed"] for s in STAGES)
+    assert jobs == []
+    assert result["clusters"].count() == rows["entity_clusters"]
+
+
+def test_deleted_part_file_recomputes_stage(spark, small_workdir):
+    """A part file removed after the stage completed invalidates the
+    checkpoint through the sidecar manifest (reads open no footer, so the
+    scan would otherwise drop its rows silently)."""
+    from pilsner_spark.sources.catalog import Catalog
+
+    tr, work, rows = small_workdir
+    cat = Catalog(spark, work)
+    fullest = max(cat.lineage("blocks_raw")["partitions"], key=lambda p: p["rows"])
+    assert 0 < fullest["rows"] < rows["blocks_raw"]
+    os.remove(os.path.join(work, "blocks_raw", fullest["file"]))
+    assert not cat.exists("blocks_raw")
+
+    result = run_er_pipeline(spark, work, tr)
+    assert result["metrics"]["blocks_raw"]["resumed"] is False
+    assert result["metrics"]["blocks_raw"]["rows"] == rows["blocks_raw"]
+    assert result["pipeline"].catalog.read("blocks_raw").count() == rows["blocks_raw"]
+
+
+def test_truncated_sidecar_recomputes_stage(spark, small_workdir):
+    """A sidecar cut short is unreadable, not an error: the checkpoint is
+    invalid and the rerun recomputes that stage."""
+    from pilsner_spark.sources.catalog import Catalog
+
+    tr, work, rows = small_workdir
+    sidecar = os.path.join(work, "mentions._lineage.json")
+    with open(sidecar, "r+") as f:
+        f.truncate(os.path.getsize(sidecar) // 2)
+    cat = Catalog(spark, work)
+    assert cat.lineage("mentions") is None
+    assert not cat.exists("mentions")
+    with pytest.raises(ValueError, match="'mentions'"):
+        cat.read("mentions")
+
+    result = run_er_pipeline(spark, work, tr)
+    assert result["metrics"]["mentions"]["resumed"] is False
+    assert result["metrics"]["mentions"]["rows"] == rows["mentions"]
+
+
+def test_sidecar_without_schema_is_not_a_checkpoint(spark, tmp_path):
+    """Sidecars written before schemas were recorded do not resume: the
+    stage recomputes rather than falling back to schema inference."""
+    import json
+
+    from pilsner_spark.sources.catalog import Catalog
+
+    cat = Catalog(spark, str(tmp_path))
+    cat.write(spark.range(10), "t", {"p": 1})
+    assert cat.exists("t", {"p": 1})
+    lineage = cat.lineage("t")
+    del lineage["schema_json"]
+    with open(tmp_path / "t._lineage.json", "w") as f:
+        json.dump(lineage, f)
+    assert not cat.exists("t", {"p": 1})
+    with pytest.raises(ValueError, match="'t'"):
+        cat.read("t")
 
 
 def test_score_pairs_broadcast_and_shuffle_paths_agree(spark):

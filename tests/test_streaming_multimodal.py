@@ -513,6 +513,13 @@ def test_incremental_cluster_assignments(spark, model, tmp_path):
     }
     assert set(clusters) == {"a#0", "b#0", "c#0"}
     assert clusters["a#0"] == clusters["b#0"] == clusters["c#0"]
+    # the row-count meta lands via temp file + rename: whole, no temp left
+    import json
+    import os
+
+    with open(f"{work}/stream_cluster_meta.json") as f:
+        assert json.load(f)["rows"] == spark.read.parquet(f"{work}/stream_cluster_nodes").count()
+    assert not os.path.exists(f"{work}/stream_cluster_meta.json.tmp")
 
 
 def test_incremental_clustering_merge_rewrites_only_touched_buckets(spark, model, tmp_path):
