@@ -445,7 +445,12 @@ def q_er_clusters(spark, sf_dir):
     )
     from pilsner_spark.operators.clustering import cluster_turns
     from pilsner_spark.operators.mentions import extract_mentions_df, normalized_text_df, turn_entities_df
-    from pilsner_spark.operators.scoring import match_edges, score_pairs, turn_features
+    from pilsner_spark.operators.scoring import (
+        jw_scores_for_undecided,
+        score_pairs_base,
+        split_match_edges,
+        turn_features,
+    )
     from pilsner_spark.sources.sample_dictionary import build_sample_model
 
     model = build_sample_model()
@@ -468,7 +473,10 @@ def q_er_clusters(spark, sf_dir):
     blocks, _ = salt_oversized_blocks(token_blocks(turns), 400, 16)
     pairs = candidate_pairs(blocks)
     feats = turn_features(turns, with_turn_key(turn_entities_df(extract_mentions_df(tr, model))))
-    clusters = cluster_turns(turns, match_edges(score_pairs(pairs, feats)))
+    # base stays lazy (no checkpoint): its two consumers, the shared-entity
+    # edges and the undecided slice, each recompute its joins
+    base = score_pairs_base(pairs, feats)
+    clusters = cluster_turns(turns, split_match_edges(base, jw_scores_for_undecided(base, feats)))
     return clusters.groupBy("cluster_id").agg(F.count("*").alias("n_turns")).filter(F.col("n_turns") > 1)
 
 

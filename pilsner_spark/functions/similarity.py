@@ -61,10 +61,10 @@ def jaro_winkler(s1: str, s2: str, prefix_scale: float = 0.1) -> float:
 
 @F.pandas_udf(T.DoubleType())
 def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Null inputs yield null (cheap skip): callers mask inputs with
-    ``F.when(cond, col)`` so the O(len^2) character work runs only on rows
-    that need it — ArrowEvalPython evaluates the UDF for every row, so the
-    masking must happen in the inputs, not around the UDF call."""
+    """Null inputs yield null. ArrowEvalPython evaluates the UDF for every
+    row it is given (``F.when(cond, udf(...))`` does not skip rows), so
+    callers feed it only the rows that need the character work — the
+    scoring split plan runs it on the undecided slice alone."""
     return pd.Series(
         [None if x is None or y is None else jaro_winkler(x, y) for x, y in zip(a, b)],
         dtype="float64",

@@ -6,11 +6,30 @@ resolved entity from mention extraction — the feature that separates the
 hard ambiguous pairs, e.g. identical 'conflicting refrigerator' surfaces
 belonging to different entities).
 
-Physical shape: the pair table joins the per-turn feature table twice on
-turn_key (shuffle joins; the per-turn table is the smaller side and often
-broadcastable at moderate scale — Spark/AQE decides). Features are computed
-in one projection; only the JW feature leaves the JVM (one Arrow round-trip
-per batch).
+Decision rule (``similarity_match``): a shared dictionary entity is a
+match; otherwise high textual similarity (near-duplicate turns) matches —
+UNLESS both sides resolved to disjoint entity sets
+(``conflicting_entities``), which vetoes the similarity match: on
+template-heavy corpora (same boilerplate around different product names)
+similarity alone would merge distinct entities.
+
+Physical shape: a split plan in two stages.
+
+1. ``score_pairs_base`` joins the pair table to the per-turn feature table
+   twice on turn_key for the cheap set features (shared entity, conflict,
+   token jaccard) and an ``undecided`` flag. The join payload is keys +
+   fixed-width token hashes + entity sets only, and no Python node touches
+   the |pairs| rows.
+2. ``jw_scores_for_undecided`` runs the character-level kernels
+   (Jaro-Winkler via Arrow, Levenshtein) on the undecided slice alone,
+   typically a small fraction of the pairs.
+
+Why a plan split and not a conditional: ``F.when(cond, udf(...))`` does
+NOT short-circuit. Catalyst extracts Python UDFs into an ArrowEvalPython
+node that evaluates the UDF for EVERY input row before the conditional
+projection (measured 10x+ stage slowdown at 5M pairs with <0.001%
+undecided), and a same-plan filter+union would recompute the join subtree
+twice (Catalyst does not materialize common subtrees).
 """
 
 from __future__ import annotations
@@ -44,149 +63,23 @@ def turn_features(turns: DataFrame, mentions_entities: DataFrame) -> DataFrame:
     )
 
 
-def score_pairs(
-    pairs: DataFrame,
-    features: DataFrame,
-    jw_threshold: float = 0.92,
-    jaccard_threshold: float = 0.6,
-    broadcast_features: bool = False,
-) -> DataFrame:
-    """Score every candidate pair; returns the scored table with a boolean
-    ``is_match``.
-
-    Decision rule: a shared dictionary entity is a match; otherwise high
-    textual similarity (near-duplicate turns) matches — UNLESS both sides
-    resolved to disjoint entity sets (``conflicting_entities``), which
-    vetoes the similarity match: on template-heavy corpora (same
-    boilerplate around different product names) similarity alone would
-    merge distinct entities. Thresholds are engine parameters surfaced in
-    pipeline params/lineage.
-    """
-    # Join payload: keys + fixed-width token hashes + entity sets ONLY.
-    # The normalized text is deliberately NOT joined: at |pairs| >>
-    # |turns| the dominant scoring cost is copying the joined feature
-    # payload once per pair, and the ~100-char norm strings double it while
-    # being needed only for the rare undecided rows (see below).
-    side_cols = ["htokens", "mention_entities"] + ([] if broadcast_features else ["norm_text"])
-
-    def side(suffix: str) -> DataFrame:
-        renames = {"htokens": "htokens_", "mention_entities": "entities_", "norm_text": "norm_"}
-        sel = [F.col("turn_key").alias(f"key_{suffix}")] + [
-            F.col(c).alias(renames[c] + suffix) for c in side_cols
-        ]
-        return features.select(*sel)
-
-    fa, fb = side("a"), side("b")
-    # Join strategy: the pair table is |pairs| ~ O(block_size x turns) while
-    # the per-turn feature table is O(turns) — at every realistic setting the
-    # fact/dim ratio is huge. When the caller knows the feature table fits in
-    # executor memory (``broadcast_features``), force broadcast-hash joins:
-    # the scoring stage then has NO shuffle at all (scan pairs -> two
-    # map-side hash joins -> project -> write), which is what keeps it
-    # linearly scalable — a sort-merge join here moves |pairs| x width
-    # through the shuffle twice. When the feature table is too big for a
-    # broadcast (10^9+ turns per job slice), leave it to AQE/sort-merge.
-    if broadcast_features:
-        fa, fb = F.broadcast(fa), F.broadcast(fb)
-    scored = (
-        pairs.join(fa, "key_a").join(fb, "key_b")
-        .withColumn("shared_entity", F.arrays_overlap("entities_a", "entities_b"))
-        # both sides resolved by the dictionary, to DISJOINT entity sets:
-        # the strongest negative signal available — two near-identical
-        # turns mentioning different entities (same template, different
-        # product name) must not be merged on text similarity alone
-        .withColumn(
-            "conflicting_entities",
-            (F.size("entities_a") > 0) & (F.size("entities_b") > 0) & ~F.col("shared_entity"),
-        )
-        .withColumn("jaccard", token_jaccard(F.col("htokens_a"), F.col("htokens_b")))
-    )
-    # Levenshtein (O(len^2)) and Jaro-Winkler are the expensive features:
-    # compute them only where the cheap set features leave the decision
-    # open (a shared-entity pair matches regardless, a low-jaccard pair
-    # cannot reach threshold). `F.when(cond, udf(...))` would NOT achieve
-    # that: Catalyst extracts Python UDFs into an ArrowEvalPython node
-    # that evaluates the UDF for EVERY input row before the conditional
-    # projection (measured 10x+ stage slowdown at 5M pairs with <0.001%
-    # undecided). Masking the UDF *inputs* instead keeps one join pass
-    # while the character-level work runs only on genuinely undecided rows.
-    undecided = ~F.col("shared_entity") & (F.col("jaccard") >= jaccard_threshold * 0.5)
-    if broadcast_features:
-        # Fetch norm_text for undecided rows only, via two more broadcast
-        # hash joins keyed on the MASKED keys (null key -> no match -> null
-        # norm). The norm table stays executor-side the whole way — no
-        # driver collect, no per-Python-worker copy of a broadcast dict
-        # (the previous design collected O(turns) text through the driver
-        # and unpickled it once per UDF worker). Decided rows join nothing,
-        # so the expensive-feature columns stay null exactly where the
-        # masking wants them.
-        norms_a = F.broadcast(
-            features.select(F.col("turn_key").alias("_nk_a"), F.col("norm_text").alias("norm_a"))
-        )
-        norms_b = F.broadcast(
-            features.select(F.col("turn_key").alias("_nk_b"), F.col("norm_text").alias("norm_b"))
-        )
-        scored = (
-            scored.withColumn("_uk_a", F.when(undecided, F.col("key_a")))
-            .withColumn("_uk_b", F.when(undecided, F.col("key_b")))
-            .join(norms_a, F.col("_uk_a") == F.col("_nk_a"), "left")
-            .join(norms_b, F.col("_uk_b") == F.col("_nk_b"), "left")
-            .drop("_uk_a", "_uk_b", "_nk_a", "_nk_b")
-        )
-        mask = lambda c: F.col(c)  # noqa: E731 — masking already applied by the joins
-    else:
-        mask = lambda c: F.when(undecided, F.col(c))  # noqa: E731
-    scored = scored.withColumns(
-        {
-            "lev_ratio": F.coalesce(
-                F.when(undecided, levenshtein_ratio(mask("norm_a"), mask("norm_b"))),
-                F.lit(0.0),
-            ),
-            "jw": F.coalesce(jaro_winkler_udf(mask("norm_a"), mask("norm_b")), F.lit(0.0)),
-        }
-    )
-    return scored.withColumn(
-        "is_match",
-        F.col("shared_entity")
-        | (
-            ~F.col("conflicting_entities")
-            & (F.col("jw") >= jw_threshold)
-            & (F.col("jaccard") >= jaccard_threshold)
-        ),
-    ).select(
-        "key_a", "key_b", "shared_entity", "conflicting_entities", "jaccard", "lev_ratio", "jw", "is_match"
-    )
-
-
-def match_edges(scored: DataFrame) -> DataFrame:
-    # distinct: the scored table may contain duplicate pairs (see
-    # candidate_pairs(dedupe=False)); deduping here touches only the small
-    # edge set instead of the full pair table
-    return scored.filter(F.col("is_match")).select("key_a", "key_b").distinct()
-
-
-# -- split scored plan -------------------------------------------------------
-#
-# The single-pass score_pairs above ships EVERY pair row through the
-# ArrowEvalPython node for the JW UDF, even though the masked inputs are
-# null on the (typically ~100%) decided rows — linear and vectorized, but
-# a measurable per-row serialization + pipeline-barrier tax on the
-# dominant stage. The checkpointing pipeline can do better because the
-# base table is materialized anyway: stage 1 computes the cheap set
-# features with NO Python in the plan (pure whole-stage codegen), stage 2
-# re-reads the checkpoint with a PUSHED undecided=true filter and runs the
-# character-level kernels on that slice only. This is a plan split rather
-# than a conditional because `F.when(cond, udf(...))` evaluates the UDF on
-# all rows (see the masking note in score_pairs) — and a same-plan
-# filter+union would recompute the join subtree twice (Catalyst does not
-# materialize common subtrees).
-
-
 def undecided_expr(jaccard_threshold: float = 0.6):
     """Rows where the cheap set features leave the match decision open: a
     shared-entity pair matches regardless; a pair far below the jaccard
-    gate cannot reach it (0.5 safety factor, same margin score_pairs uses)."""
+    gate cannot reach it (0.5 safety factor)."""
     return ~F.col("shared_entity") & (F.col("jaccard") >= jaccard_threshold * 0.5)
+
+
+def similarity_match(jw_threshold: float = 0.92, jaccard_threshold: float = 0.6):
+    """The similarity half of the match rule: near-duplicate text on both
+    the character (Jaro-Winkler) and token (jaccard) level, vetoed when
+    both sides resolved to disjoint entity sets. A pair matches when it
+    shares an entity OR satisfies this."""
+    return (
+        ~F.col("conflicting_entities")
+        & (F.col("jw") >= jw_threshold)
+        & (F.col("jaccard") >= jaccard_threshold)
+    )
 
 
 def score_pairs_base(
@@ -265,14 +158,11 @@ def split_match_edges(
     decided matches are exactly the shared-entity pairs (jw=0 elsewhere),
     similarity matches live entirely in the jw slice (which carries its
     own jaccard/conflict columns). The two sets are disjoint by
-    construction (the slice is ~shared_entity); distinct() collapses
-    duplicate pairs on the small edge set, as match_edges does."""
+    construction (the slice is ~shared_entity). distinct() collapses
+    duplicate pairs (candidate_pairs(dedupe=False)) on the small edge set
+    rather than on the full pair table."""
     shared = base.filter(F.col("shared_entity")).select("key_a", "key_b")
-    sim = jw_scores.filter(
-        ~F.col("conflicting_entities")
-        & (F.col("jw") >= jw_threshold)
-        & (F.col("jaccard") >= jaccard_threshold)
-    ).select("key_a", "key_b")
+    sim = jw_scores.filter(similarity_match(jw_threshold, jaccard_threshold)).select("key_a", "key_b")
     return shared.union(sim).distinct()
 
 
@@ -282,10 +172,10 @@ def star_shared_edges(blocks: DataFrame, turn_entities: DataFrame) -> DataFrame:
     group's MINIMUM turn instead of to every other member.
 
     Why it's exact: a shared-entity match edge exists iff two turns share a
-    block AND an entity (score_pairs' ``shared_entity`` over candidate
-    pairs) — i.e. the pairwise edges form a clique on each (block, entity)
-    group, and a star spans a clique's vertices with identical transitive
-    closure, so connected components are unchanged (parity-pinned by
+    block AND an entity (``shared_entity`` over candidate pairs) — i.e.
+    the pairwise edges form a clique on each (block, entity) group, and a
+    star spans a clique's vertices with identical transitive closure, so
+    connected components are unchanged (parity-pinned by
     test_star_edges_cluster_parity).
 
     Why it matters: the pairwise edge mass is quadratic in group size
@@ -316,11 +206,7 @@ def star_match_edges(
     sparsified to stars (``star_shared_edges``) and the similarity
     component taken pairwise from the tiny jw slice — same components as
     ``split_match_edges``, linear edge mass."""
-    sim = jw_scores.filter(
-        ~F.col("conflicting_entities")
-        & (F.col("jw") >= jw_threshold)
-        & (F.col("jaccard") >= jaccard_threshold)
-    ).select("key_a", "key_b")
+    sim = jw_scores.filter(similarity_match(jw_threshold, jaccard_threshold)).select("key_a", "key_b")
     return star_shared_edges(blocks, turn_entities).unionByName(sim).distinct()
 
 
@@ -331,10 +217,12 @@ def finalize_scored(
     jaccard_threshold: float = 0.6,
     broadcast_jw: bool = True,
 ) -> DataFrame:
-    """The full scored view with score_pairs' exact schema: base pairs
-    left-joined to the (deduplicated) jw slice — a broadcast hash join
-    when the slice fits (``broadcast_jw``), so consumers needing per-pair
-    jw/lev columns pay one map-side join, never a shuffle of |pairs|."""
+    """The full scored view (key_a, key_b, shared_entity,
+    conflicting_entities, jaccard, lev_ratio, jw, is_match), jw/lev 0
+    outside the undecided slice: base pairs left-joined to the
+    (deduplicated) jw slice — a broadcast hash join when the slice fits
+    (``broadcast_jw``), so consumers needing per-pair jw/lev columns pay
+    one map-side join, never a shuffle of |pairs|."""
     j = jw_scores.select("key_a", "key_b", "lev_ratio", "jw")
     if broadcast_jw:
         j = F.broadcast(j)
@@ -346,15 +234,7 @@ def finalize_scored(
                 "jw": F.coalesce("jw", F.lit(0.0)),
             }
         )
-        .withColumn(
-            "is_match",
-            F.col("shared_entity")
-            | (
-                ~F.col("conflicting_entities")
-                & (F.col("jw") >= jw_threshold)
-                & (F.col("jaccard") >= jaccard_threshold)
-            ),
-        )
+        .withColumn("is_match", F.col("shared_entity") | similarity_match(jw_threshold, jaccard_threshold))
         .select(
             "key_a", "key_b", "shared_entity", "conflicting_entities", "jaccard", "lev_ratio", "jw", "is_match"
         )

@@ -233,9 +233,8 @@ def run_er_pipeline(
     # Split scored plan (VERDICT r2 item 2): stage 1 is pure codegen (no
     # ArrowEvalPython over |pairs|); stage 2 re-reads the checkpoint with
     # a pushed undecided=true filter and runs JW/Levenshtein on that slice
-    # only. score_pairs (single-pass, masked inputs) remains the right
-    # shape for non-checkpointing callers — here the materialization is
-    # free because the stage checkpoints anyway.
+    # only. The materialization the split needs is free here because the
+    # stage checkpoints anyway.
     # The scored checkpoint is compact: of the O(pairs) scored rows,
     # downstream only ever reads the shared-entity rows (decided match
     # edges) and the undecided rows (the JW slice) — typically <2% of the

@@ -270,11 +270,13 @@ def test_star_edges_cluster_parity(spark, transcripts, tmp_path):
     transitive closure. Non-vacuous: the corpus must contain multi-member
     groups (real sparsification) and similarity-only edges must survive."""
     from pilsner_spark.operators.clustering import cluster_turns
-    from pilsner_spark.operators.scoring import match_edges
+    from pilsner_spark.operators.scoring import split_match_edges
 
     result = run_er_pipeline(spark, str(tmp_path / "work"), transcripts)
-    turns = result["pipeline"].catalog.read("turns_normalized")
-    pairwise_edges = match_edges(result["scored"])
+    catalog = result["pipeline"].catalog
+    turns = catalog.read("turns_normalized")
+    # the pipeline's pairwise edge branch, off the compact scored checkpoint
+    pairwise_edges = split_match_edges(catalog.read("scored_pairs"), catalog.read("jw_scores"))
     star_clusters = {(r.turn_key, r.cluster_id) for r in result["clusters"].collect()}
     pairwise_clusters = {
         (r.turn_key, r.cluster_id)
@@ -286,7 +288,7 @@ def test_star_edges_cluster_parity(spark, transcripts, tmp_path):
     from pilsner_spark.operators.mentions import turn_entities_df
     from pilsner_spark.operators.scoring import star_shared_edges
 
-    mentions = result["pipeline"].catalog.read("mentions")
+    mentions = catalog.read("mentions")
     ents = _wtk(turn_entities_df(mentions))
     n_star = star_shared_edges(result["blocks_salted"], ents).count()
     n_pairwise = pairwise_edges.count()
@@ -361,44 +363,82 @@ def test_er_pipeline_hard_negatives_earn_f1(spark, tmp_path):
     assert hardneg.count() > 0
 
 
-def test_split_plan_matches_single_pass_scorer(spark, model, transcripts, tmp_path):
+def test_split_plan_matches_python_oracle(spark, model, transcripts, tmp_path):
     """The split scored plan (base + undecided-slice JW + join-back) must
-    produce row-for-row the same scored table and the same match edges as
-    the single-pass score_pairs — on the sample corpus, whose ambiguous
-    surfaces exercise shared-entity, conflict-veto AND similarity paths."""
+    produce row-for-row the scored table and the match edges that the match
+    rule gives when computed in plain Python from the per-turn tokens,
+    entities and normalized text. Two corpora: the sample corpus (shared
+    entities, conflicts, a non-empty undecided slice) and a small
+    template-heavy one whose near-duplicates exercise the similarity match
+    and its conflict veto."""
+    from pilsner_spark.functions.similarity import jaro_winkler
     from pilsner_spark.operators.mentions import extract_mentions_df
     from pilsner_spark.operators.scoring import (
         finalize_scored,
         jw_scores_for_undecided,
-        match_edges,
-        score_pairs,
         score_pairs_base,
         split_match_edges,
         turn_features,
     )
     from pilsner_spark.sources.synth import pipeline_input
 
-    turns = with_turn_key(normalized_text_df(pipeline_input(transcripts), model))
-    blocks, _ = salt_oversized_blocks(token_blocks(turns), 400, 16)
-    pairs = candidate_pairs(blocks, dedupe=False)
-    feats = turn_features(turns, with_turn_key(turn_entities_df(extract_mentions_df(transcripts, model))))
-    # materialize like the pipeline does (the split reads base from parquet)
-    base_path = str(tmp_path / "base")
-    score_pairs_base(pairs, feats, broadcast_features=True).write.parquet(base_path)
-    base = spark.read.parquet(base_path)
-    jw = jw_scores_for_undecided(base, feats, broadcast_features=True).localCheckpoint()
-    assert jw.count() > 0, "corpus must exercise the undecided slice"
+    def lev_ratio(a, b):
+        prev = list(range(len(b) + 1))
+        for i, ca in enumerate(a, 1):
+            cur = [i]
+            for j, cb in enumerate(b, 1):
+                cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+            prev = cur
+        return 1.0 - prev[-1] / max(len(a), len(b)) if a or b else 1.0
 
-    split = finalize_scored(base, jw)
-    single = score_pairs(pairs, feats, broadcast_features=True)
-    cols = ["key_a", "key_b", "shared_entity", "conflicting_entities", "jaccard", "lev_ratio", "jw", "is_match"]
-    a = sorted(map(tuple, split.select(*cols).collect()))
-    b = sorted(map(tuple, single.select(*cols).collect()))
-    assert a == b
+    def check(tr, name):
+        turns = with_turn_key(normalized_text_df(pipeline_input(tr), model))
+        blocks, _ = salt_oversized_blocks(token_blocks(turns), 400, 16)
+        pairs = candidate_pairs(blocks, dedupe=False).localCheckpoint()
+        feats = turn_features(turns, with_turn_key(turn_entities_df(extract_mentions_df(tr, model))))
+        feats = feats.localCheckpoint()
+        # materialize like the pipeline does (the split reads base from parquet)
+        base_path = str(tmp_path / name)
+        score_pairs_base(pairs, feats, broadcast_features=True).write.parquet(base_path)
+        base = spark.read.parquet(base_path)
+        jw = jw_scores_for_undecided(base, feats, broadcast_features=True).localCheckpoint()
+        assert jw.count() > 0, "corpus must exercise the undecided slice"
 
-    e_split = sorted(map(tuple, split_match_edges(base, jw).collect()))
-    e_single = sorted(map(tuple, match_edges(single).collect()))
-    assert e_split == e_single and len(e_split) > 0
+        turn = {
+            r["turn_key"]: (set(r["tokens"]), set(r["mention_entities"]), r["norm_text"])
+            for r in feats.select("turn_key", "tokens", "mention_entities", "norm_text").collect()
+        }
+        expected = []
+        for p in pairs.collect():
+            tok_a, ent_a, norm_a = turn[p["key_a"]]
+            tok_b, ent_b, norm_b = turn[p["key_b"]]
+            shared = bool(ent_a & ent_b)
+            conflicting = bool(ent_a) and bool(ent_b) and not shared
+            union = len(tok_a | tok_b)
+            jaccard = len(tok_a & tok_b) / union if union else 0.0
+            undecided = not shared and jaccard >= 0.6 * 0.5
+            jw_val = jaro_winkler(norm_a, norm_b) if undecided else 0.0
+            lev = lev_ratio(norm_a, norm_b) if undecided else 0.0
+            is_match = shared or (not conflicting and jw_val >= 0.92 and jaccard >= 0.6)
+            expected.append((p["key_a"], p["key_b"], shared, conflicting, jaccard, lev, jw_val, is_match))
+        expected.sort()
+
+        cols = ["key_a", "key_b", "shared_entity", "conflicting_entities", "jaccard", "lev_ratio", "jw", "is_match"]
+        got = sorted(map(tuple, finalize_scored(base, jw).select(*cols).collect()))
+        assert len(got) == len(expected)
+        for g, e in zip(got, expected):
+            assert g[:4] == e[:4] and g[7] == e[7], (g, e)
+            assert g[4:7] == pytest.approx(e[4:7]), (g, e)
+
+        edges = sorted(map(tuple, split_match_edges(base, jw).collect()))
+        assert edges == sorted({(e[0], e[1]) for e in expected if e[7]}) and len(edges) > 0
+        return expected
+
+    sample = check(transcripts, "sample")
+    assert any(e[2] for e in sample) and any(e[3] for e in sample)
+    hard = check(synth_transcripts(spark, n_convs=40, seed=7, hard_conv_every=4).localCheckpoint(), "hard")
+    assert any(e[7] and not e[2] for e in hard), "no similarity-only match"
+    assert any(e[3] and e[4] >= 0.6 and e[6] >= 0.92 for e in hard), "no vetoed similarity match"
 
 
 def test_pipeline_resume(spark, transcripts, tmp_path):
@@ -556,12 +596,17 @@ def test_sidecar_without_schema_is_not_a_checkpoint(spark, tmp_path):
         cat.read("t")
 
 
-def test_score_pairs_broadcast_and_shuffle_paths_agree(spark):
-    """The broadcast path (norm_text fetched for undecided rows via masked
-    broadcast joins — no driver collect) and the shuffle path (norm columns
-    joined per pair) must produce identical scores — including JW/lev on
-    undecided near-duplicate pairs."""
-    from pilsner_spark.operators.scoring import score_pairs, turn_features
+def test_split_scorer_broadcast_and_shuffle_paths_agree(spark):
+    """The broadcast path (feature and norm_text joins broadcast) and the
+    shuffle path (left to AQE/sort-merge) of the split scorer must produce
+    identical scores — including JW/lev on undecided near-duplicate pairs.
+    The pipeline picks between them by turn count, so both stay live."""
+    from pilsner_spark.operators.scoring import (
+        finalize_scored,
+        jw_scores_for_undecided,
+        score_pairs_base,
+        turn_features,
+    )
 
     rows = [
         ("c1#0", "alpha beta gamma delta epsilon"),
@@ -577,14 +622,14 @@ def test_score_pairs_broadcast_and_shuffle_paths_agree(spark):
     pairs = spark.createDataFrame(
         [("c1#0", "c2#0"), ("c1#0", "c3#0"), ("c1#0", "c4#0")], "key_a string, key_b string"
     )
-    out_b = {
-        (r["key_a"], r["key_b"]): r
-        for r in score_pairs(pairs, feats, broadcast_features=True).collect()
-    }
-    out_s = {
-        (r["key_a"], r["key_b"]): r
-        for r in score_pairs(pairs, feats, broadcast_features=False).collect()
-    }
+
+    def scored(broadcast: bool):
+        base = score_pairs_base(pairs, feats, broadcast_features=broadcast)
+        jw = jw_scores_for_undecided(base, feats, broadcast_features=broadcast)
+        out = finalize_scored(base, jw, broadcast_jw=broadcast).collect()
+        return {(r["key_a"], r["key_b"]): r for r in out}
+
+    out_b, out_s = scored(True), scored(False)
     assert set(out_b) == set(out_s) == {("c1#0", "c2#0"), ("c1#0", "c3#0"), ("c1#0", "c4#0")}
     for k in out_b:
         for col in ("shared_entity", "jaccard", "lev_ratio", "jw", "is_match"):
@@ -596,15 +641,21 @@ def test_score_pairs_broadcast_and_shuffle_paths_agree(spark):
     assert not out_b[("c1#0", "c3#0")]["is_match"]
 
 
-def test_match_edges_dedupes_duplicate_pairs(spark):
-    from pilsner_spark.operators.scoring import match_edges
+def test_split_match_edges_dedupes_duplicate_pairs(spark):
+    """candidate_pairs(dedupe=False) scores a pair once per shared block
+    key; the edge set collapses the duplicates of both edge kinds."""
+    from pilsner_spark.operators.scoring import split_match_edges
 
-    scored = spark.createDataFrame(
-        [("a", "b", True), ("a", "b", True), ("a", "c", False)],
-        "key_a string, key_b string, is_match boolean",
+    base = spark.createDataFrame(
+        [("a", "b", True), ("a", "b", True), ("a", "c", False), ("a", "c", False), ("a", "d", False)],
+        "key_a string, key_b string, shared_entity boolean",
     )
-    edges = match_edges(scored).collect()
-    assert [(r["key_a"], r["key_b"]) for r in edges] == [("a", "b")]
+    jw = spark.createDataFrame(
+        [("a", "c", False, 0.8, 0.95), ("a", "c", False, 0.8, 0.95), ("a", "d", False, 0.8, 0.5)],
+        "key_a string, key_b string, conflicting_entities boolean, jaccard double, jw double",
+    )
+    edges = split_match_edges(base, jw).collect()
+    assert sorted((r["key_a"], r["key_b"]) for r in edges) == [("a", "b"), ("a", "c")]
 
 
 def test_candidate_pairs_dedupe_flag(spark):

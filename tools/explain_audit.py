@@ -103,17 +103,6 @@ CHECKS = {
         ],
         "avoid": [],
     },
-    "er_scored_pairs": {
-        "want": [
-            ("all four feature joins broadcast", r"BroadcastHashJoin"),
-            ("JW kernel Arrow-batched", r"ArrowEvalPython"),
-        ],
-        "avoid": [
-            ("ZERO shuffles in the scoring stage", r"^\(\d+\) Exchange"),
-            ("no sort-merge join", r"SortMergeJoin"),
-            ("no row-at-a-time Python", r"BatchEvalPython"),
-        ],
-    },
     # the split plan the PIPELINE actually runs (VERDICT r2 item 2):
     # stage 1 = set features, pure codegen — NO Python node over |pairs|
     "er_scored_base": {
@@ -365,39 +354,6 @@ CHECKS = {
 }
 
 
-def _er_scored_pairs_df(spark):
-    """The pipeline's dominant stage as it actually runs: pair + feature
-    tables materialized (checkpoint analog), then score_pairs with
-    broadcast features — the plan must be scan -> 4 map-side hash joins ->
-    Arrow eval -> project, with no Exchange anywhere."""
-    import tempfile
-
-    from pilsner_spark.operators.blocking import (
-        candidate_pairs,
-        salt_oversized_blocks,
-        token_blocks,
-        with_turn_key,
-    )
-    from pilsner_spark.operators.mentions import extract_mentions_df, normalized_text_df, turn_entities_df
-    from pilsner_spark.operators.scoring import score_pairs, turn_features
-    from pilsner_spark.sources.sample_dictionary import build_sample_model
-    from pilsner_spark.sources.synth import pipeline_input, synth_transcripts
-
-    model = build_sample_model()
-    tr = synth_transcripts(spark, n_convs=60, seed=42).localCheckpoint()
-    turns = with_turn_key(normalized_text_df(pipeline_input(tr), model))
-    blocks, _ = salt_oversized_blocks(token_blocks(turns), 400, 16)
-    tmp = tempfile.mkdtemp(prefix="plan_audit_")
-    candidate_pairs(blocks, dedupe=False).write.mode("overwrite").parquet(f"{tmp}/pairs")
-    feats = turn_features(turns, with_turn_key(turn_entities_df(extract_mentions_df(tr, model))))
-    feats.write.mode("overwrite").parquet(f"{tmp}/feats")
-    return score_pairs(
-        spark.read.parquet(f"{tmp}/pairs"),
-        spark.read.parquet(f"{tmp}/feats"),
-        broadcast_features=True,
-    )
-
-
 def _split_stage_dfs(spark):
     """Materialized inputs for the split-plan audits (built once)."""
     import tempfile
@@ -547,7 +503,6 @@ def _ann_refined_served_df(spark):
 
 
 BUILDERS = {
-    "er_scored_pairs": _er_scored_pairs_df,
     "ann_ivf_pq_served": _ann_served_df,
     "ann_ivf_pq_refined_served": _ann_refined_served_df,
     "er_scored_base": _split("er_scored_base"),
